@@ -200,21 +200,22 @@ def cmd_reproc_inject(args, spark: SparkSession) -> int:
 
     store = ChangelogStore(spark, args.store)
     if args.finalize:
-        heights = []
+        ckpts = []
         for s in range(args.shards):
             ckpt = store.checkpoint(str(s))
             if ckpt is None:
                 print(f"shard {s} missing its checkpoint", file=sys.stderr)
                 return 1
-            heights.append(ckpt.height)
+            ckpts.append(ckpt)
         # min-of-max: the height to which every entity is complete (same
         # rule as operators/sharding.reconcile_checkpoint; the reference's
         # equal-heights requirement is the special case where every shard
-        # got a record per block, sharder.go:153-160)
-        final = min(heights)
-        store._write_checkpoint(final, None, final)
+        # got a record per block, sharder.go:153-160).  Its block id
+        # becomes the LIB a live pipeline links its first block to.
+        final = min(ckpts, key=lambda c: c.height)
+        store._write_checkpoint(final.height, final.block_id, final.block_num)
         store.delete_shard_checkpoints()
-        print(f"final checkpoint written at height {final}")
+        print(f"final checkpoint written at height {final.height}")
         return 0
     if args.shard is None:
         print("--shard K or --finalize required", file=sys.stderr)

@@ -20,11 +20,12 @@ from fluxdb_spark.catalog._core import (  # noqa: F401
     _t,
     _td,
     catalog,
+    stamp_order,
 )
 
 # Importing the category modules registers their @_q entries in _SPECS.
-# Order is irrelevant for catalog() output (every entry is listed in
-# _PRIORITY) but kept stable for reviewability.
+# Registration order breaks ties in the computed catalog() order, so keep
+# it stable.
 from fluxdb_spark.catalog import _shared  # noqa: E402,F401
 from fluxdb_spark.catalog import temporal  # noqa: E402,F401
 from fluxdb_spark.catalog import relational  # noqa: E402,F401
@@ -39,3 +40,6 @@ for _m in (_shared, temporal, relational, pipeline, streaming):
         if not _k.startswith("__"):
             globals().setdefault(_k, _v)
 del _m, _k, _v
+
+# every entry is registered now: compute the correctness-window order
+_PRIORITY[:] = stamp_order(_SPECS)

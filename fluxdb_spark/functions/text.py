@@ -45,20 +45,6 @@ def marker_hits(text: Column, markers: list[str]) -> Column:
     return F.size(F.filter(tokens(text), lambda t: t.isin(*markers)))
 
 
-def stopword_ratio(text: Column) -> Column:
-    return F.round(
-        marker_hits(text, STOPWORDS) / token_count(text), 4
-    )
-
-
-def avg_token_len(text: Column) -> Column:
-    n = token_count(text)
-    total = F.aggregate(
-        tokens(text), F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
-    )
-    return F.round(total / n, 4)
-
-
 def quality_score(text: Column) -> Column:
     """Deterministic quality heuristic in [0,1]: length saturation +
     stopword presence, arithmetic only. Truncated with floor (not round):
@@ -165,17 +151,6 @@ def floor4(c: Column) -> Column:
     """Truncate to 4 decimals with floor — bit-identical across engines,
     unlike decimal rounding at .xxxx5 boundaries (see quality_score)."""
     return F.floor(c * 10000) / 10000.0
-
-
-def distinct_stopword_count(text: Column) -> Column:
-    """How many DISTINCT stopwords appear (Gopher's 'at least 2 of the stop
-    set' rule needs distinct membership, not occurrence counts)."""
-    return F.size(
-        F.array_intersect(
-            F.array_distinct(tokens(F.lower(text))),
-            F.array(*[F.lit(w) for w in STOPWORDS]),
-        )
-    )
 
 
 def quality_rules_from(toks: Column, dltoks: Column) -> dict[str, Column]:
@@ -598,83 +573,6 @@ r AS (SELECT term, cnt,
 SELECT rank, term, cnt,
        floor(cnt * 1.0 / (SELECT total FROM t) * 1000000) / 1000000.0 AS share
 FROM r WHERE rank <= {k}
-"""
-
-
-def tokenize_corpus(
-    docs,
-    vocab_size: int = 1000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """Corpus tokenization: build a rank-by-frequency vocabulary (id 1 =
-    most frequent term; ties by term; 0 = OOV) and encode every document
-    as its id sequence — the format-conversion step between curation and
-    training. Returns (doc_id, ids array<int>, n_tokens, n_oov).
-
-    Scale shape: the vocabulary is reduced by a combine-friendly groupBy,
-    cut to `vocab_size` with TakeOrdered (distributed top-k — only the
-    survivors pass through a single-partition rank, bounded by
-    vocab_size); encoding is one broadcast-sized equi-join on the term and
-    a per-doc sort_array over collected (pos, id) structs — no global
-    order, no Python."""
-    from fluxdb_spark.session import spread
-
-    toks = spread(docs).select(
-        F.col(id_col),
-        F.posexplode(tokens(F.lower(F.col(text_col)))).alias("pos", "term"),
-    )
-    vocab = (
-        toks.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.desc("cnt"), F.col("term"))
-        .limit(vocab_size)
-    )
-    ranked = vocab.withColumn(
-        "tid",
-        F.row_number()
-        .over(Window.orderBy(F.desc("cnt"), F.col("term")))
-        .cast("int"),
-    ).select("term", "tid")
-    enc = toks.join(F.broadcast(ranked), on="term", how="left").select(
-        F.col(id_col),
-        "pos",
-        F.coalesce(F.col("tid"), F.lit(0)).cast("int").alias("tid"),
-    )
-    return enc.groupBy(id_col).agg(
-        F.transform(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("pos"), F.col("tid")))
-            ),
-            lambda s: s["tid"],
-        ).alias("ids"),
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.sum(F.when(F.col("tid") == 0, 1).otherwise(0))
-        .cast("long")
-        .alias("n_oov"),
-    )
-
-
-def sql_tokenize_corpus(vocab_size: int = 1000) -> str:
-    return f"""
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term,
-         generate_subscripts(string_split(lower(text), ' '), 1) - 1 AS pos
-  FROM documents),
-vocab AS (
-  SELECT term, count(*) AS cnt FROM toks GROUP BY term
-  ORDER BY cnt DESC, term LIMIT {vocab_size}),
-ranked AS (
-  SELECT term,
-         CAST(row_number() OVER (ORDER BY cnt DESC, term) AS INT) AS tid
-  FROM vocab),
-enc AS (
-  SELECT t.doc_id, t.pos, coalesce(r.tid, 0) AS tid
-  FROM toks t LEFT JOIN ranked r USING (term))
-SELECT doc_id, list(tid ORDER BY pos) AS ids,
-       count(*) AS n_tokens,
-       CAST(sum(CASE WHEN tid = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_oov
-FROM enc GROUP BY doc_id
 """
 
 

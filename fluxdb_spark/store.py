@@ -65,6 +65,7 @@ from dataclasses import dataclass
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from fluxdb_spark.schema import CHANGELOG_SCHEMA
 
@@ -1125,6 +1126,34 @@ def _zorder_key(key_col: str, height_col: str) -> "F.Column":
 
 DEFAULT_HEIGHT_BAND = 100_000
 
+# the data files' read schema: the band partition column rides along
+_BANDED_SCHEMA = T.StructType(
+    CHANGELOG_SCHEMA.fields
+    + [T.StructField("height_band", T.LongType(), True)]
+)
+
+
+def read_appended(
+    spark: SparkSession, root: str, files: list[str]
+) -> DataFrame:
+    """The changelog rows of committed data `files` (paths relative to
+    the store root, as commit entries' `add` lists record them), read in
+    the format stamped in the store's _meta.json.  Followers and
+    maintainers read new commits through this without opening the store,
+    which would run recovery."""
+    data_format = "parquet"
+    meta_path = os.path.join(root, "_meta.json")
+    if os.path.exists(meta_path):
+        with open(meta_path) as f:
+            data_format = json.load(f).get("data_format", "parquet")
+    return (
+        spark.read.option("basePath", os.path.join(root, "changelog"))
+        .schema(_BANDED_SCHEMA)
+        .format(data_format)
+        .load([os.path.join(root, rel) for rel in files])
+        .drop("height_band")
+    )
+
 
 class ChangelogStore:
     def __init__(
@@ -1966,14 +1995,10 @@ class ChangelogStore:
             raise WriteConsistencyError(
                 "pending write manifest: run recover() before rewriting"
             )
-        from pyspark.sql import types as T
-
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        read_schema = T.StructType(
-            CHANGELOG_SCHEMA.fields
-            + [T.StructField("height_band", T.LongType(), True)]
+        df = self._backend.committed_relation(
+            _BANDED_SCHEMA, self.checkpoint
         )
-        df = self._backend.committed_relation(read_schema, self.checkpoint)
         stats = {"kind": kind, "bands_rewritten": 0, "rows_matched": 0}
         if df is None:
             return stats
@@ -2098,8 +2123,6 @@ class ChangelogStore:
         heights it covered. Resolved from the backend's commit log;
         versions below the newest rewrite commit (compact / expire / DML)
         are refused because rewrites vacuum replaced files eagerly."""
-        from pyspark.sql import types as T
-
         if max_height is not None:
             horizon = self.retention_horizon()
             if max_height < horizon:
@@ -2107,14 +2130,12 @@ class ChangelogStore:
                     f"read at height {max_height} is below the retention "
                     f"horizon {horizon}: that history was expired"
                 )
-        read_schema = T.StructType(
-            CHANGELOG_SCHEMA.fields
-            + [T.StructField("height_band", T.LongType(), True)]
-        )
         if at_version is not None:
-            df = self._backend.relation_at_version(read_schema, at_version)
+            df = self._backend.relation_at_version(_BANDED_SCHEMA, at_version)
         else:
-            df = self._backend.committed_relation(read_schema, self.checkpoint)
+            df = self._backend.committed_relation(
+                _BANDED_SCHEMA, self.checkpoint
+            )
         if df is None:
             return self.spark.createDataFrame([], CHANGELOG_SCHEMA)
         if max_height is not None:
@@ -2176,22 +2197,14 @@ class ChangelogStore:
                 "resolvable: commit entries in the range were pruned"
             )
         files = [
-            os.path.join(self.root, rel)
+            rel
             for e in sorted(in_range, key=lambda e: e["version"])
             if e.get("action") == "append"
             for rel in e.get("add", ())
         ]
         if not files:
             return self.spark.createDataFrame([], CHANGELOG_SCHEMA)
-        from pyspark.sql import types as T
-
-        read_schema = T.StructType(
-            CHANGELOG_SCHEMA.fields
-            + [T.StructField("height_band", T.LongType(), True)]
-        )
-        return self._backend._read(
-            *files, schema=read_schema, base_path=self._data_dir
-        ).drop("height_band")
+        return read_appended(self.spark, self.root, files)
 
     def history(self) -> DataFrame:
         """DESCRIBE HISTORY analog: one row per commit, in version order —

@@ -4,8 +4,10 @@ The reference's stateful core (ProcessBlock, pipeline.go:330-439):
 
 - StepNew: block enters the in-memory ForkDB; the speculative write-list for
   the current head fork is recomputed;
-- StepIrreversible: the block's rows join the durable write batch, flushed
-  when >5,000 rows or 1 s elapsed; LIB advances and the ForkDB is purged.
+- StepIrreversible: the block's rows join the durable write batch; LIB
+  advances and the ForkDB is purged.  The batch is flushed once it holds
+  `flush_rows` rows (5,000 by default), and `bind_live_blocks` also
+  flushes at the end of every micro-batch.
 
 Spark-first translation: a Structured-Streaming `foreachBatch` (or direct
 `process_block` calls for deterministic tests) where final rows append to the
@@ -29,7 +31,6 @@ from fluxdb_spark.schema import CHANGELOG_SCHEMA
 from fluxdb_spark.store import ChangelogStore
 
 FLUSH_ROWS = 5_000  # reference pipeline.go:374-382
-FLUSH_SECONDS = 1.0
 
 # block payloads above this size are parsed executor-side (JVM from_json
 # + explode) instead of through driver json.loads — see bind_live_blocks

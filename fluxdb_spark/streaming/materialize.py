@@ -38,9 +38,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from fluxdb_spark.schema import CHANGELOG_SCHEMA
+from fluxdb_spark.store import ChangelogStore, read_appended
 from fluxdb_spark.streaming.follow import stream_commits
 
 _MERGE = {"sum": F.sum, "min": F.min, "max": F.max}
@@ -117,13 +116,29 @@ def _recover(dest: str, grace_s: float = 0.5) -> None:
             shutil.rmtree(os.path.join(parent, p), ignore_errors=True)
 
 
+def _read_state(dest: str) -> dict | None:
+    """dest's state file, or None when there is none (a fresh table).
+    A file that is there but unreadable raises: read as fresh, it would
+    fold every redelivered entry again and skip the format check."""
+    path = _state_path(dest)
+    try:
+        with open(path) as f:
+            state = json.load(f)
+        int(state["applied_version"])
+    except FileNotFoundError:
+        return None
+    except (OSError, ValueError, TypeError, KeyError) as e:
+        raise ValueError(
+            f"unreadable state file {path} ({e!r}): delete {dest} and "
+            "rebuild it from the store"
+        ) from e
+    return state
+
+
 def applied_version(dest: str) -> int:
     _recover(dest)
-    try:
-        with open(_state_path(dest)) as f:
-            return int(json.load(f)["applied_version"])
-    except (FileNotFoundError, KeyError, ValueError):
-        return 0
+    state = _read_state(dest)
+    return 0 if state is None else int(state["applied_version"])
 
 
 def read_aggregate(spark: SparkSession, dest: str) -> DataFrame | None:
@@ -169,16 +184,6 @@ def materialize_aggregate(
                 f"unsupported merge '{merge}': algebraic merges are "
                 f"{sorted(_MERGE)}"
             )
-    read_schema = T.StructType(
-        CHANGELOG_SCHEMA.fields
-        + [T.StructField("height_band", T.LongType(), True)]
-    )
-    data_dir = os.path.join(src_root, "changelog")
-    data_format = "parquet"
-    meta_path = os.path.join(src_root, "_meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            data_format = json.load(f).get("data_format", "parquet")
 
     def _swap_in(part: DataFrame, version: int) -> None:
         tmp = f"{dest}.tmp-{uuid.uuid4().hex}"
@@ -217,10 +222,8 @@ def materialize_aggregate(
         if any(
             e.action == "rewrite" and e.kind != "compact" for e in batch
         ):
-            from fluxdb_spark.store import ChangelogStore
-
             store = ChangelogStore(spark, src_root)
-            top = store._backend.commit_log.latest_version()
+            top = store.latest_commit_version()
             full = store.changelog(at_version=top)
             if pre is not None:
                 full = pre(full)
@@ -234,17 +237,8 @@ def materialize_aggregate(
         entries = [e for e in batch if e.action == "append"]
         if not entries:
             return
-        files = [
-            os.path.join(src_root, rel)
-            for e in entries
-            for rel in (e.add or ())
-        ]
-        rows = (
-            spark.read.option("basePath", data_dir)
-            .schema(read_schema)
-            .format(data_format)
-            .load(files)
-            .drop("height_band")
+        rows = read_appended(
+            spark, src_root, [rel for e in entries for rel in (e.add or ())]
         )
         if pre is not None:
             rows = pre(rows)

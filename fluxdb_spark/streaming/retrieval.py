@@ -39,12 +39,12 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from fluxdb_spark.schema import CHANGELOG_SCHEMA
 from fluxdb_spark.session import spread
+from fluxdb_spark.store import ChangelogStore, read_appended
 from fluxdb_spark.streaming.follow import stream_commits
 from fluxdb_spark.streaming.materialize import (
+    _read_state,
     _recover,
     _state_path,
     applied_version,
@@ -70,16 +70,8 @@ def _stored_format(dest: str) -> int | None:
     """The format stamp in dest's state file: None when the dest has
     no confirmed state yet (fresh dir), 1 when the state predates
     format stamping."""
-    path = _state_path(dest)
-    if not os.path.exists(path):
-        return None
-    import json
-
-    try:
-        with open(path) as f:
-            return int(json.load(f).get("format", 1))
-    except (ValueError, OSError):
-        return None
+    state = _read_state(dest)
+    return None if state is None else int(state.get("format", 1))
 
 
 def _check_format(dest: str) -> None:
@@ -162,18 +154,6 @@ def _rowwise_processor(spark: SparkSession, src_root: str, dest, transform):
     # refuse to append format-N rows into a dest built by a different
     # layout generation — the caller must rebuild instead
     _check_format(dest)
-    read_schema = T.StructType(
-        CHANGELOG_SCHEMA.fields
-        + [T.StructField("height_band", T.LongType(), True)]
-    )
-    data_dir = os.path.join(src_root, "changelog")
-    data_format = "parquet"
-    meta_path = os.path.join(src_root, "_meta.json")
-    if os.path.exists(meta_path):
-        import json
-
-        with open(meta_path) as f:
-            data_format = json.load(f).get("data_format", "parquet")
 
     def _commit(df: DataFrame, version: int, floor: int) -> None:
         # drop unconfirmed leftovers of a crashed batch, then land the
@@ -229,10 +209,8 @@ def _rowwise_processor(spark: SparkSession, src_root: str, dest, transform):
             import json
             import uuid
 
-            from fluxdb_spark.store import ChangelogStore
-
             store = ChangelogStore(spark, src_root)
-            top = store._backend.commit_log.latest_version()
+            top = store.latest_commit_version()
             full = transform(store.changelog(at_version=top))
             tmp = f"{dest}.tmp-{uuid.uuid4().hex}"
             full.write.mode("overwrite").parquet(
@@ -251,17 +229,8 @@ def _rowwise_processor(spark: SparkSession, src_root: str, dest, transform):
         entries = [e for e in batch if e.action == "append"]
         if not entries:
             return
-        files = [
-            os.path.join(src_root, rel)
-            for e in entries
-            for rel in (e.add or ())
-        ]
-        rows = (
-            spark.read.option("basePath", data_dir)
-            .schema(read_schema)
-            .format(data_format)
-            .load(files)
-            .drop("height_band")
+        rows = read_appended(
+            spark, src_root, [rel for e in entries for rel in (e.add or ())]
         )
         # a small delta arrives as few splits and would run the
         # (map-heavy: signatures, bucket hashes) transform on as few

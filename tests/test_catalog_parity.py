@@ -90,6 +90,47 @@ def test_priority_window_is_stale_first():
     )
 
 
+def test_stamp_order_rotates_the_window(tmp_path):
+    """The window order is computed from the stamp files: never-stamped
+    entries first, then oldest stamp first, oracle-less entries last, and
+    registration order with no stamps at all.  A round that stamps the
+    current window moves it on by itself."""
+    import json
+
+    from fluxdb_spark.catalog import _SPECS, stamp_order
+
+    def stamp(rnd, names, ok=True):
+        res = {"rows_match": True, "schema_match": True, "hash_match": ok}
+        (tmp_path / f"CORRECTNESS_r{rnd}.json").write_text(
+            json.dumps({n: res for n in names})
+        )
+
+    oracled = [s.name for s in _SPECS if s.oracle is not None]
+    rows_only = [s.name for s in _SPECS if s.oracle is None]
+    assert rows_only, "the catalog has an oracle-less entry to place"
+    assert stamp_order(_SPECS, tmp_path) == oracled + rows_only
+    # catalog() returns every spec exactly once
+    assert sorted(s.name for s in catalog()) == sorted(
+        s.name for s in _SPECS
+    )
+
+    # the last 10 are never stamped (a hash mismatch is no stamp), and a
+    # stamp never pulls an oracle-less entry forward
+    stamp(9, oracled[:-10] + rows_only)
+    stamp(8, oracled[-10:], ok=False)
+    order = stamp_order(_SPECS, tmp_path)
+    assert order[:10] == oracled[-10:]
+    assert order[-len(rows_only):] == rows_only
+
+    # r10 sorts after r9 numerically; the stamped window rotates out
+    window = order[:50]
+    stamp(10, window)
+    order = stamp_order(_SPECS, tmp_path)
+    assert not set(order[:50]) & set(window)
+    assert order[:50] == oracled[40:90]
+    assert sorted(order) == sorted(SPECS)
+
+
 @pytest.mark.sweep
 @pytest.mark.parametrize("name", sorted(SPECS))
 def test_query_matches_oracle(spark, duck, name):

@@ -96,6 +96,38 @@ def test_scatter_inject_finalize_roundtrip(spark, dirs, capsys):
     assert store2.checkpoint("0") is None and store2.checkpoint("1") is None
 
 
+def test_finalize_keeps_head_block_id(spark, tmp_path):
+    """--finalize writes the block id of the lowest shard checkpoint, so a
+    live pipeline opened on the backfilled store links its first block to
+    that LIB at once (an empty id leaves the overlay empty until the first
+    final block)."""
+    from fluxdb_spark.store import ChangelogStore
+    from fluxdb_spark.streaming.ingest import IngestPipeline
+    from tests.conftest import make_changelog
+
+    shards, root = str(tmp_path / "shards"), str(tmp_path / "store")
+    rows = [("t0", h, "k0", f"v{h}") for h in range(1, 6)]
+    rows += [("t1", h, "k1", f"w{h}") for h in range(1, 4)]
+    make_changelog(spark, rows).withColumn(
+        "shard", F.when(F.col("tablet_id") == "t0", 0).otherwise(1)
+    ).write.partitionBy("shard").parquet(shards)
+    inject = ["reproc-inject", "--out", shards, "--store", root]
+    for k in ("0", "1"):
+        assert main(inject + ["--shard", k], spark) == 0
+    assert main(inject + ["--finalize", "--shards", "2"], spark) == 0
+
+    store = ChangelogStore(spark, root)
+    ckpt = store.checkpoint()
+    # shard 1 ends at height 3: make_changelog ids blocks "<height hex>aa"
+    assert (ckpt.height, ckpt.block_id, ckpt.block_num) == (3, "00000003aa", 3)
+    pipe = IngestPipeline(store)
+    pipe.process_new_block(
+        "live-4", 4, ckpt.block_id,
+        [("tst", "t1", 4, "k1", "w4", False, "live-4", 4)],
+    )
+    assert pipe.speculative_writes() is not None
+
+
 def test_finalize_refuses_missing_shard(spark, dirs, tmp_path, capsys):
     assert main(
         [

@@ -1078,6 +1078,22 @@ class TestMaterializedAggregate:
                 str(tmp_path / "ck"),
             )
 
+    def test_corrupt_state_file_raises(self, tmp_path):
+        """An absent state file is a fresh table (floor 0); a garbled one
+        must raise, not read as 0 and fold redelivered entries again."""
+        from fluxdb_spark.streaming.materialize import (
+            _state_path,
+            applied_version,
+        )
+
+        dest = str(tmp_path / "agg")
+        assert applied_version(dest) == 0
+        os.makedirs(dest)
+        with open(_state_path(dest), "w") as f:
+            f.write('{"applied_version": 7')
+        with pytest.raises(ValueError, match="unreadable state file"):
+            applied_version(dest)
+
 
 class TestFsck:
     """fsck: commit-log vs on-disk consistency (the fsck + VACUUM pair)."""

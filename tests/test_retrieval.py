@@ -270,6 +270,19 @@ class TestRowwiseMaterializer:
             _json.dump(state, f)
         assert rt.read_derived(spark, dest) is not None
 
+    def test_corrupt_state_file_refused(self, tmp_path):
+        """A garbled state file must not read as a fresh dir, which would
+        skip the format check: absent is None, unreadable raises."""
+        from fluxdb_spark.streaming.materialize import _state_path
+
+        dest = str(tmp_path / "sigs")
+        assert rt._stored_format(dest) is None
+        os.makedirs(dest)
+        with open(_state_path(dest), "wb") as f:
+            f.write(b"\x00\xff garbage")
+        with pytest.raises(ValueError, match="unreadable state file"):
+            rt._stored_format(dest)
+
 
 class TestFoldCompaction:
     """compact_derived(fold_keys=...): the derived table is rewritten to
